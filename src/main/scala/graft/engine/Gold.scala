@@ -173,4 +173,8 @@ object Gold {
     "inventory_movement_summary" -> "inventory",
     "inventory_net_position" -> "inventory"
   )
+
+  /** The gold tables one silver domain feeds, sorted. */
+  def tablesOf(domain: String): Seq[String] =
+    domainByTable.collect { case (t, d) if d == domain => t }.toSeq.sorted
 }

@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -23,7 +24,7 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Scale: the seen-files log is O(files) on the driver — at 100 TB keep bronze files
   * large (the generators' 10-row CSVs would be the real bottleneck; compact at the
-  * landing zone) and set `maxFilesPerTrigger` to bound micro-batch size.
+  * landing zone).
   */
 object Incremental {
 
@@ -32,14 +33,12 @@ object Incremental {
     * `get_unprocessed_bronze_files` contract (`local_storage.py:90-97`). */
   def drainBronzeToSilver(spark: SparkSession, domain: String,
                           bronzeDir: String, silverDir: String,
-                          checkpointDir: String,
-                          maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream
+                          checkpointDir: String): Unit = {
+    val clean = Silver.cleanerByDomain(domain)
+    val query = spark.readStream
       .schema(Schemas.bronzeByDomain(domain))
       .option("header", "true")
-    maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
-    val clean = Silver.cleanerByDomain(domain)
-    val query = reader.csv(bronzeDir)
+      .csv(bronzeDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
@@ -119,69 +118,30 @@ object Incremental {
       .withWatermark(eventTime, watermarkDelay)
       .dropDuplicatesWithinWatermark(keys)
 
-  /** Incremental gold: the scale-path replacement for the reference's
-    * full-history recompute (`silver_to_gold.py:219-235`, O(history) per run and
-    * growing without bound).
+  /** Incremental gold for ALL gold tables of one domain in a single drain: the
+    * scale-path replacement for the reference's full-history recompute
+    * (`silver_to_gold.py:219-235`, O(history) per run and growing without
+    * bound).
     *
-    * Streams silver appends; each micro-batch determines which event *dates* it
-    * touches, re-aggregates ONLY those dates (partition-pruned silver re-read:
-    * the filter is on the year/month/day partition columns, so untouched
-    * directories are never scanned), and dynamically overwrites just those date
-    * partitions of the gold table. Cost per tick: O(touched partitions), not
-    * O(history). The result is kept bit-identical to a full recompute — asserted
-    * in tests — because each touched date is rebuilt from all of its silver
-    * rows, not merged incrementally (no drift, crash-safe via the checkpoint +
-    * dynamic-overwrite atomic partition swap).
-    */
-  def incrementalGold(spark: SparkSession, domain: String, table: String,
-                      silverDir: String, goldDir: String, checkpointDir: String): Unit = {
-    val builder = Gold.buildersByTable(table)
-    val query = spark.readStream
-      .schema(silverStreamSchema(domain))
-      .parquet(silverDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val touched = batch.filter(col("is_valid"))
-            .select(col("year"), col("month"), col("day")).distinct().collect()
-          if (touched.nonEmpty) {
-            val prune = touched.map { r =>
-              col("year") === r.getInt(0) && col("month") === r.getInt(1) && col("day") === r.getInt(2)
-            }.reduce(_ || _)
-            val silverTouched = spark.read.parquet(silverDir).filter(prune)
-            builder(silverTouched)
-              .write
-              .mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("date")
-              .parquet(goldDir)
-          }
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  /** ALL gold tables of one domain maintained in a SINGLE drain — the full
-    * fan-out shape of [[incrementalGold]] (which drives one table per call):
-    * per micro-batch the touched (year, month, day) set is computed ONCE, the
-    * partition-pruned silver re-read is computed once and cached, and every
+    * Streams silver appends; per micro-batch the touched event dates
+    * (year, month, day) are computed ONCE, the partition-pruned silver
+    * re-read (the filter is on the partition columns, so untouched
+    * directories are never scanned) is computed once and cached, and every
     * gold table of the domain rebuilds and dynamically overwrites just its
-    * touched date partitions from that shared frame. Cost per tick:
-    * O(touched partitions) + one builder aggregation per table over the
-    * pruned rows — never O(history), which is exactly what the reference's
-    * full-recompute gold (`silver_to_gold.py:219-235`) cannot do. Each
-    * table's content stays bit-identical to its batch builder on the full
-    * silver (asserted in IncrementalSpec across multiple ticks), because
-    * every touched date is rebuilt from ALL of its silver rows.
+    * touched date partitions from that shared frame
+    * ([[Sources.overwritePartitions]]). Cost per tick: O(touched partitions)
+    * + one builder aggregation per table over the pruned rows — never
+    * O(history). Each table's content stays bit-identical to its batch
+    * builder on the full silver (asserted in IncrementalSpec across multiple
+    * ticks), because every touched date is rebuilt from ALL of its silver
+    * rows, not merged incrementally (no drift, crash-safe via the checkpoint
+    * + dynamic-overwrite atomic partition swap).
     *
     * Returns the table names maintained, sorted. */
   def incrementalGoldDomain(spark: SparkSession, domain: String,
                             silverDir: String, goldRoot: String,
                             checkpointDir: String): Seq[String] = {
-    val tables = Gold.domainByTable.collect { case (t, d) if d == domain => t }.toSeq.sorted
+    val tables = Gold.tablesOf(domain)
     val query = spark.readStream
       .schema(silverStreamSchema(domain))
       .parquet(silverDir)
@@ -196,12 +156,8 @@ object Incremental {
             }.reduce(_ || _)
             val silverTouched = spark.read.parquet(silverDir).filter(prune).cache()
             try tables.foreach { table =>
-              Gold.buildersByTable(table)(silverTouched)
-                .write
-                .mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("date")
-                .parquet(Layout.goldDir(goldRoot, table))
+              Sources.overwritePartitions(Gold.buildersByTable(table)(silverTouched),
+                Layout.goldDir(goldRoot, table), "date")
             } finally silverTouched.unpersist(blocking = false)
           }
         }
@@ -231,7 +187,7 @@ object Incremental {
     val silver = Sources.readSilver(spark, silverDir)
     val base = Gold.withValidDated(silver).cache()
     try {
-      val tables = Gold.domainByTable.collect { case (t, d) if d == domain => t }.toSeq.sorted
+      val tables = Gold.tablesOf(domain)
       tables.foreach { table =>
         val gold = Gold.withGeneratedAt(Gold.buildersByTable(table)(base))
         Sources.writeGoldSnapshot(gold, Layout.goldDir(goldRoot, table))
@@ -255,7 +211,7 @@ object Incremental {
     * Scale: each batch costs one key-shuffle join of state × batch (broadcast
     * the batch side when small) plus a full state rewrite — the no-log price;
     * partition the state table and rewrite only touched partitions (as
-    * [[incrementalGold]] does) once state outgrows a single rewrite. */
+    * [[incrementalGoldDomain]] does) once state outgrows a single rewrite. */
   def streamingUpsert(spark: SparkSession, updates: DataFrame, keys: Seq[String],
                       stateDir: String, checkpointDir: String): Unit = {
     val query = updates.writeStream
@@ -362,56 +318,81 @@ object Incremental {
     * fixture/test path) overwrites both data and manifest — safe only when
     * a single writer owns the store. */
   def commitVersionExclusive(df: DataFrame, stateDir: String, v: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = df.sparkSession
     val dir = s"$stateDir/v=$v"
     val path = new Path(dir)
+    val fs = fsOf(df.sparkSession, path)
     val manifest = new Path(path, CommitManifest)
-    val claim = new Path(path, "_graft_claim")
-    val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def lost() = throw new java.util.ConcurrentModificationException(
-      s"commitVersionExclusive: version $v of $stateDir is already claimed/" +
-        "committed — re-read latest, rebase, retry at a later version")
-    if (fs.exists(manifest) || fs.exists(claim)) lost()
     // Claim BEFORE writing any data: create-exclusive is the linearization
     // point, so a losing writer never stages bytes into the winner's
     // directory (staging first and claiming after would let the loser's
     // mode=overwrite delete the winner's files mid-commit).
-    fs.mkdirs(path)
-    try fs.create(claim, false).close()
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => lost()
-      case _: java.io.IOException if fs.exists(claim) => lost()
-    }
+    claimExclusive(fs, new Path(path, "_graft_claim"), manifest,
+      s"commitVersionExclusive: version $v of $stateDir")
     // We own the claim: stage data (append — overwrite would delete the
-    // claim), then publish the manifest (readers only believe manifests).
+    // claim), then publish the manifest create-exclusively (readers only
+    // believe manifests).
     df.write.mode("append").parquet(dir)
-    val files = fs.listStatus(path).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("part-")).sorted
-    val json = files.map(f => "\"" + f + "\"")
-      .mkString(s"""{"version":$v,"files":[""", ",", "]}")
-    val out = fs.create(manifest, false)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeUtf8(fs, manifest, overwrite = false, commitManifestJson(fs, path, v))
   }
 
   /** The commit step alone: manifest the `part-` files already staged under
     * `dir` (temp-write + rename, atomic on local/HDFS semantics). */
   private def writeCommitManifest(spark: SparkSession, dir: String, v: Long): Unit = {
-    import org.apache.hadoop.fs.Path
     val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(path).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("part-")).sorted
-    val json = files.map(f => "\"" + f + "\"")
-      .mkString(s"""{"version":$v,"files":[""", ",", "]}")
-    val tmp = new Path(path, "._graft_commit.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val fs = fsOf(spark, path)
+    publishByRename(fs, new Path(path, CommitManifest), commitManifestJson(fs, path, v))
+  }
+
+  // ---- the versioned store's on-disk codec: every manifest read, write and
+  // claim goes through these helpers.
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Commit-manifest JSON for version `v`: the `part-` files directly under
+    * `dir`, sorted. */
+  private def commitManifestJson(fs: FileSystem, dir: Path, v: Long): String =
+    fs.listStatus(dir).toSeq.map(_.getPath.getName).filter(_.startsWith("part-")).sorted
+      .map(f => "\"" + f + "\"").mkString(s"""{"version":$v,"files":[""", ",", "]}")
+
+  /** The data files a manifest lists: bare `part-` names in a commit
+    * manifest, absolute paths in a clone manifest. */
+  private def manifestEntries(fs: FileSystem, manifest: Path): Seq[String] = {
+    val in = fs.open(manifest)
+    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    "\"([^\"]*part-[^\"]+)\"".r.findAllMatchIn(json).map(_.group(1)).toSeq
+  }
+
+  private def writeUtf8(fs: FileSystem, p: Path, overwrite: Boolean, text: String): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    val dest = new Path(path, CommitManifest)
+  }
+
+  /** Publish `text` at `dest` atomically: write a temp sibling, then rename it
+    * over `dest` (atomic on local/HDFS semantics). */
+  private def publishByRename(fs: FileSystem, dest: Path, text: String): Unit = {
+    val tmp = new Path(dest.getParent, s".${dest.getName}.tmp")
+    writeUtf8(fs, tmp, overwrite = true, text)
     if (fs.exists(dest)) fs.delete(dest, false)
-    require(fs.rename(tmp, dest), s"commitVersion: rename to $dest failed")
+    require(fs.rename(tmp, dest), s"rename to $dest failed")
+  }
+
+  /** Take the create-exclusive `claim`, the linearization point of
+    * [[commitVersionExclusive]] and [[commitTransaction]]: throws
+    * `ConcurrentModificationException` if the claim or the `published`
+    * commit already exists, or another writer wins the create. */
+  private def claimExclusive(fs: FileSystem, claim: Path, published: Path,
+                             what: String): Unit = {
+    def lost() = throw new java.util.ConcurrentModificationException(
+      s"$what is already claimed/committed — re-read latest, rebase, retry at a later version")
+    if (fs.exists(published) || fs.exists(claim)) lost()
+    fs.mkdirs(claim.getParent)
+    try fs.create(claim, false).close()
+    catch {
+      case _: FileAlreadyExistsException => lost()
+      case _: java.io.IOException if fs.exists(claim) => lost()
+    }
   }
 
   /** Write-audit-publish: stage `df` as version `v`, audit WHAT WAS STAGED
@@ -444,9 +425,8 @@ object Incremental {
   /** Committed version ids under `stateDir`, ascending. Uncommitted `v=` dirs
     * (no manifest — a writer crashed mid-snapshot) are invisible. */
   def committedVersions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
     val path = new Path(stateDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     if (!fs.exists(path)) Seq.empty
     else fs.listStatus(path).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("v=") &&
@@ -476,9 +456,8 @@ object Incremental {
     require(keep >= 2,
       "vacuumVersions: keep must be >= 2 — the newest committed version's " +
         "predecessor is the recovery point for an uncheckpointed streaming batch")
-    import org.apache.hadoop.fs.Path
     val path = new Path(stateDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     if (!fs.exists(path)) Seq.empty
     else {
       val committed = committedVersions(spark, stateDir)
@@ -528,9 +507,6 @@ object Incremental {
     Cdc.snapshotDiff(from, to, keys)
   }
 
-  /** The latest COMMITTED snapshot with version strictly below
-    * `beforeVersion`. Reads exactly the files the commit manifest lists, so
-    * concurrent writers/vacuums and leftover partial files are invisible. */
   /** SHALLOW CLONE (zero-copy snapshot clone, the Delta `CLONE` shape): the
     * clone's `v=0` is a manifest of ABSOLUTE file references into the source
     * version's committed parquet — no data moves, clone cost is one metadata
@@ -545,25 +521,14 @@ object Incremental {
     * Returns the number of files referenced. */
   def shallowCloneVersion(spark: SparkSession, srcStateDir: String,
                           srcVersion: Long, destStateDir: String): Int = {
-    import org.apache.hadoop.fs.Path
     val srcDir = s"$srcStateDir/v=$srcVersion"
     val srcPath = new Path(srcDir)
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new Path(srcPath, CommitManifest))
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val files = "\"(part-[^\"]+)\"".r.findAllMatchIn(json).map(_.group(1)).toSeq
-    val refs = files.map(f => s"$srcDir/$f")
+    val fs = fsOf(spark, srcPath)
+    val refs = manifestEntries(fs, new Path(srcPath, CommitManifest)).map(f => s"$srcDir/$f")
     val destDir = new Path(s"$destStateDir/v=0")
     fs.mkdirs(destDir)
-    val cloneJson = refs.map(r => "\"" + r + "\"")
-      .mkString(s"""{"src_version":$srcVersion,"refs":[""", ",", "]}")
-    val tmp = new Path(destDir, "._graft_clone.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(cloneJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dest = new Path(destDir, CloneManifest)
-    if (fs.exists(dest)) fs.delete(dest, false)
-    require(fs.rename(tmp, dest), s"shallowCloneVersion: rename to $dest failed")
+    publishByRename(fs, new Path(destDir, CloneManifest), refs.map(r => "\"" + r + "\"")
+      .mkString(s"""{"src_version":$srcVersion,"refs":[""", ",", "]}"))
     refs.size
   }
 
@@ -571,15 +536,9 @@ object Incremental {
     * source table's vacuum exclusion set. Empty if `destStateDir` has no
     * clone manifest. */
   def cloneReferencedFiles(spark: SparkSession, destStateDir: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(s"$destStateDir/v=0", CloneManifest)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      "\"([^\"]+part-[^\"]+)\"".r.findAllMatchIn(json).map(_.group(1)).toSeq
-    }
+    val fs = fsOf(spark, p)
+    if (!fs.exists(p)) Seq.empty else manifestEntries(fs, p)
   }
 
   /** Read a cloned table's CURRENT state: the latest locally-committed
@@ -620,25 +579,14 @@ object Incremental {
     * marker are one metadata file each — commit cost is O(tables),
     * independent of data. */
   def commitTransaction(tables: Map[String, DataFrame], stateDir: String, v: Long): Unit = {
-    import org.apache.hadoop.fs.Path
     require(tables.nonEmpty, "commitTransaction: no tables to commit")
-    val spark = tables.head._2.sparkSession
     val txnDir = new Path(s"$stateDir/_txn")
     val marker = new Path(txnDir, s"v=$v")
-    val claim = new Path(txnDir, s"v=$v._claim")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def lost() = throw new java.util.ConcurrentModificationException(
-      s"commitTransaction: transaction $v of $stateDir is already claimed/" +
-        "committed — re-read latest, rebase, retry at a later version")
-    if (fs.exists(marker) || fs.exists(claim)) lost()
+    val fs = fsOf(tables.head._2.sparkSession, marker)
     // Claim BEFORE staging any table: create-exclusive is the
     // linearization point (see scaladoc).
-    fs.mkdirs(txnDir)
-    try fs.create(claim, false).close()
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => lost()
-      case _: java.io.IOException if fs.exists(claim) => lost()
-    }
+    claimExclusive(fs, new Path(txnDir, s"v=$v._claim"), marker,
+      s"commitTransaction: transaction $v of $stateDir")
     // We own the claim: stage every table, then publish the one marker
     // readers believe.
     tables.toSeq.sortBy(_._1).foreach { case (name, df) =>
@@ -646,7 +594,7 @@ object Incremental {
     }
     try fs.create(marker, false).close()
     catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+      case _: FileAlreadyExistsException |
            _: java.io.IOException if fs.exists(marker) =>
         throw new java.util.ConcurrentModificationException(
           s"commitTransaction: lost the race for transaction $v of $stateDir")
@@ -656,9 +604,8 @@ object Incremental {
   /** Highest PUBLISHED transaction version of `stateDir`, if any — only
     * marker files count; staged-but-unpublished versions are invisible. */
   def latestTxn(spark: SparkSession, stateDir: String): Option[Long] = {
-    import org.apache.hadoop.fs.Path
     val path = new Path(s"$stateDir/_txn")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     if (!fs.exists(path)) None
     else fs.listStatus(path).toSeq.map(_.getPath.getName)
       // exact v=<digits> only: `v=<v>._claim` files are claims, not commits
@@ -680,20 +627,16 @@ object Incremental {
           "has no committed version ≤ it — corrupted store"))
   }
 
+  /** The latest COMMITTED snapshot with version strictly below
+    * `beforeVersion`. Reads exactly the files the commit manifest lists, so
+    * concurrent writers/vacuums and leftover partial files are invisible. */
   def latestUpsertStateBefore(spark: SparkSession, stateDir: String,
-                              beforeVersion: Long): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val versions = committedVersions(spark, stateDir).filter(_ < beforeVersion)
-    if (versions.isEmpty) None
-    else {
-      val dir = s"$stateDir/v=${versions.max}"
+                              beforeVersion: Long): Option[DataFrame] =
+    committedVersions(spark, stateDir).filter(_ < beforeVersion).lastOption.map { v =>
+      val dir = s"$stateDir/v=$v"
       val path = new Path(dir)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(new Path(path, CommitManifest))
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val files = "\"(part-[^\"]+)\"".r.findAllMatchIn(json).map(_.group(1)).toSeq
-      if (files.isEmpty) Some(spark.read.parquet(dir).limit(0))
-      else Some(spark.read.parquet(files.map(f => s"$dir/$f"): _*))
+      val files = manifestEntries(fsOf(spark, path), new Path(path, CommitManifest))
+      if (files.isEmpty) spark.read.parquet(dir).limit(0)
+      else spark.read.parquet(files.map(f => s"$dir/$f"): _*)
     }
-  }
 }

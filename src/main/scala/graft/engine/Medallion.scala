@@ -19,23 +19,28 @@ object Medallion {
     * (checkpointed, exactly-once), then append a fresh gold snapshot per domain.
     * Returns gold table names written. Re-running without new bronze files
     * appends identical gold snapshots and re-drains nothing — the reference's
-    * idempotence contract. */
+    * idempotence contract. A domain none of whose files has landed yet (no
+    * bronze, hence no silver) is skipped, like the reference's empty-frame
+    * guard (silver_to_gold.py:38-41). */
   def runOnce(spark: SparkSession, root: String,
               domains: Seq[String] = Domains): Seq[String] = {
     domains.foreach { d =>
-      Incremental.drainBronzeToSilver(spark, d,
-        Layout.bronzeDir(root, d), Layout.silverDir(root, d), Layout.checkpointDir(root, d))
+      val bronzePath = Layout.bronzeDir(root, d)
+      if (exists(spark, bronzePath))
+        Incremental.drainBronzeToSilver(spark, d,
+          bronzePath, Layout.silverDir(root, d), Layout.checkpointDir(root, d))
     }
     domains.flatMap { d =>
       val silverPath = Layout.silverDir(root, d)
-      // Hadoop-FS existence check (a local java.io.File test would silently skip
-      // gold on HDFS/S3A roots) — absent silver = no bronze has ever landed for
-      // this domain; skip, like the reference's empty-frame guard
-      // (silver_to_gold.py:38-41).
-      val p = new org.apache.hadoop.fs.Path(silverPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) Incremental.snapshotGold(spark, d, silverPath, root)
+      if (exists(spark, silverPath)) Incremental.snapshotGold(spark, d, silverPath, root)
       else Seq.empty
     }
+  }
+
+  /** Hadoop-FS existence check (a local java.io.File test would silently skip
+    * domains on HDFS/S3A roots). */
+  private def exists(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 }

@@ -56,16 +56,11 @@ object Sources {
     * write discipline at scale: re-running a day's gold build replaces
     * exactly that day (idempotent under retries), instead of either
     * appending duplicates or truncating the whole table (static overwrite's
-    * default). The conf is save/restored so the session's other writers keep
-    * their configured semantics. */
-  def overwritePartitions(df: DataFrame, path: String, partitionCol: String): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "dynamic")
-    try df.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-    finally spark.conf.set(key, prev)
-  }
+    * default). The mode is a per-write option, so the session conf — and
+    * every other writer sharing the session, on any thread — is untouched. */
+  def overwritePartitions(df: DataFrame, path: String, partitionCol: String): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(path)
 
   /** OP-7: recursive silver scan. Spark discovers `year=/month=/day=` partitions
     * automatically and prunes them under partition filters — unlike the reference's

@@ -1008,7 +1008,7 @@ object Graph {
     * are the next frontier. Per-round exchange: the frontier-out-edge
     * aggregate + the node-keyed rewrite; the |E|-proportional aggregate
     * input of the pre-frontier form is gone (measured −30% total shuffle
-    * on the fanout-8 lattice probe — tools/SccFrontierProbe, PERF r15). */
+    * on a fanout-8 lattice, PERF r15). */
   private[graft] def sccColorStep(e: DataFrame, colors: DataFrame,
                                   front: DataFrame): DataFrame = {
     val viaIn = e
@@ -1286,7 +1286,7 @@ object Graph {
     * tables, so only the BFS still pays one pinned frame per tree level
     * (level-exact by definition; q393 paid 808 jobs round 15, 415 round
     * 16, and the log-round rework removes the two other height-
-    * proportional terms; tools/BridgesJobsProbe records each step).
+    * proportional terms).
     *
     * Scale: every step is a node-, edge-, or pair-keyed join/aggregate —
     * nothing all-pairs, no data-sized driver state (the only scalars are
@@ -1485,7 +1485,7 @@ object Graph {
     // anc_{j-1}'s, ...), and every downstream ACTION referencing the
     // tables — the descent references all of them twice, each doubling
     // round once — re-analyzes/canonicalizes that nested tree. Measured
-    // (BccPhaseProbe, round 17): driver gaps between jobs were ~60% of
+    // (round 17): driver gaps between jobs were ~60% of
     // the family's wall before the rebind. The rebind keeps each level a
     // constant-size LogicalRDD; the repartition above it re-establishes
     // the hashpartitioning the cache advertises to the join sides.

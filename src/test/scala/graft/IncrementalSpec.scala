@@ -87,29 +87,6 @@ class IncrementalSpec extends SparkSpec {
     }
   }
 
-  test("incrementalGold rebuilds only touched date partitions yet equals a full recompute") {
-    withTempDir { root =>
-      val bronze = Layout.bronzeDir(root, "sales")
-      val silver = Layout.silverDir(root, "sales")
-      val gold = Layout.goldDir(root, "daily_sales_summary")
-      def tick(seed: Long): Unit = {
-        Generators.salesBatch(spark, 60, seed).coalesce(1)
-          .write.option("header", "true").mode("append").csv(bronze)
-        Incremental.drainBronzeToSilver(spark, "sales", bronze, silver,
-          Layout.checkpointDir(root, "sales"))
-        Incremental.incrementalGold(spark, "sales", "daily_sales_summary",
-          silver, gold, s"$root/.state/gold_daily")
-      }
-      tick(21)
-      tick(22) // overlapping dates: touched partitions must be rebuilt, not duplicated
-      val incremental = Sources.readSilver(spark, gold)
-        .select("date", "total_revenue", "order_count", "avg_order_value", "unique_customers")
-      val full = graft.engine.Gold.dailySalesSummary(Sources.readSilver(spark, silver))
-      assert(incremental.count() == full.count())
-      assert(incremental.exceptAll(full).isEmpty && full.exceptAll(incremental).isEmpty)
-    }
-  }
-
   test("incrementalGoldDomain maintains all 7 gold tables across 3 domains, 2 ticks, ≡ batch builders") {
     withTempDir { root =>
       val domains = Seq("sales", "customer_events", "inventory")
