@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Generators, Gold, Incremental, Layout, Silver, Sources}
-import graft.ext.{Dedup, Similarity, TextAnalysis}
+import graft.ext.{Dedup, Frames, Similarity, TextAnalysis}
 
 /** Driver contract: one runnable, DuckDB-oracle-checked query per operator family
   * from SURVEY.md §2, phrased over the driver testdata (TESTDATA.md), plus the
@@ -3886,12 +3886,10 @@ object SparkEntry {
     "q220_modularity" -> { (s, dir) =>
       // edges feed the CC and the modularity scorer — persist + truncate
       // once (the q321 discipline)
-      val edgesC = Dedup.minhashNearDuplicatesPortable(
+      val edges = Frames.rebind(Frames.scope().keep(
+        Dedup.minhashNearDuplicatesPortable(
           docsWithPlantedNearDups(s, dir), threshold = 0.5)
-        .select(col("id_a"), col("id_b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      edgesC.count()
-      val edges = s.createDataFrame(edgesC.rdd, edgesC.schema)
+        .select(col("id_a"), col("id_b"))))
       val labels = graft.ext.Graph.connectedComponents(edges)
         .withColumnRenamed("component", "label")
       graft.ext.Graph.modularityMicro(edges, labels,
@@ -5287,12 +5285,9 @@ object SparkEntry {
       // pairs feed TWO consumers (the CC and the straddle join) — persist +
       // lineage-truncate once (the q321 discipline) or the MinHash candidate
       // generation re-executes per consumer
-      val pairsC = graft.ext.Dedup
+      val pairs = Frames.rebind(Frames.scope().keep(graft.ext.Dedup
         .minhashNearDuplicatesPortable(docs, threshold = 0.5)
-        .select(col("id_a"), col("id_b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairsC.count()
-      val pairs = s.createDataFrame(pairsC.rdd, pairsC.schema)
+        .select(col("id_a"), col("id_b"))))
       val comp = graft.ext.Graph.connectedComponents(pairs)
       val labeled = docs.select(col("doc_id"))
         .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
@@ -5501,12 +5496,9 @@ object SparkEntry {
       val docs = docsWithPlantedNearDups(s, dir)
       // pairs feed the CC and the straddle join — persist + truncate once
       // (the q321 discipline)
-      val pairsC = graft.ext.Dedup
+      val pairs = Frames.rebind(Frames.scope().keep(graft.ext.Dedup
         .minhashNearDuplicatesPortable(docs, threshold = 0.5)
-        .select(col("id_a"), col("id_b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairsC.count()
-      val pairs = s.createDataFrame(pairsC.rdd, pairsC.schema)
+        .select(col("id_a"), col("id_b"))))
       val comp = graft.ext.Graph.connectedComponents(pairs)
       val folds = docs.select(col("doc_id"))
         .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
@@ -6125,12 +6117,10 @@ object SparkEntry {
       // the MinHash pair pipeline feeds THREE consumers (batch-1 CC, the
       // delta relabel, the node set) — persist + lineage-truncate once, or
       // the candidate generation re-executes per consumer
-      val pairsC = Dedup.minhashNearDuplicatesPortable(
+      val pairs = Frames.rebind(Frames.scope().keep(
+        Dedup.minhashNearDuplicatesPortable(
           docsWithPlantedNearDups(s, dir), threshold = 0.5)
-        .select(col("id_a"), col("id_b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairsC.count()
-      val pairs = s.createDataFrame(pairsC.rdd, pairsC.schema)
+        .select(col("id_a"), col("id_b"))))
       val b1 = pairs.filter(pmod(col("id_a") + col("id_b"), lit(2L)) === 0)
       val b2 = pairs.filter(pmod(col("id_a") + col("id_b"), lit(2L)) === 1)
       val l1 = graft.ext.Graph.connectedComponents(b1)
@@ -6512,23 +6502,16 @@ object SparkEntry {
       val S = graft.ext.Similarity
       // exact truth and the seed graph each feed two consumers — persist +
       // lineage-truncate (the q321 discipline)
-      val exactC = S.knnJoin(emb, emb, k)
-        .select(col("query_id"), col("neighbor_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      exactC.count()
-      val exact = s.createDataFrame(exactC.rdd, exactC.schema)
-      val g0C = S.lshKnnGraph(emb, k, bits = 6, salts = Seq(0L, 1L))
-        .select(col("query_id"), col("neighbor_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      g0C.count()
-      val g0 = s.createDataFrame(g0C.rdd, g0C.schema)
+      val f = Frames.scope()
+      val exact = Frames.rebind(f.keep(S.knnJoin(emb, emb, k)
+        .select(col("query_id"), col("neighbor_id"))))
+      val g0 = Frames.rebind(f.keep(
+        S.lshKnnGraph(emb, k, bits = 6, salts = Seq(0L, 1L))
+        .select(col("query_id"), col("neighbor_id"))))
       // round 2 consumes round 1 (and both feed the recall audit) — same
       // persist + truncate discipline
-      val g1C = S.nnDescentRound(g0, emb, k)
-        .select(col("query_id"), col("neighbor_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      g1C.count()
-      val g1 = s.createDataFrame(g1C.rdd, g1C.schema)
+      val g1 = Frames.rebind(f.keep(S.nnDescentRound(g0, emb, k)
+        .select(col("query_id"), col("neighbor_id"))))
       val g2 = S.nnDescentRound(g1, emb, k)
         .select(col("query_id"), col("neighbor_id"))
       def hits(g: DataFrame, stage: String) =
@@ -6808,11 +6791,8 @@ object SparkEntry {
       val S = graft.ext.Similarity
       val stages = S.nnDescentConverge(emb, k, bits = 6,
         salts = Seq(0L, 1L), maxRounds = 3, minNewPermille = 10L)
-      val exactC = S.knnJoin(emb, emb, k)
-        .select(col("query_id"), col("neighbor_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      exactC.count()
-      val exact = s.createDataFrame(exactC.rdd, exactC.schema)
+      val exact = Frames.rebind(Frames.scope().keep(S.knnJoin(emb, emb, k)
+        .select(col("query_id"), col("neighbor_id"))))
       stages.map { st =>
           st.graph.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
             .agg(count(lit(1)).as("n_hits"))
@@ -7782,14 +7762,14 @@ object SparkEntry {
       val cross = s.range(240).where(col("id") % 12 === 0)
         .select(col("id").as("src"), (col("id") + 6).as("dst"))
       val edges = base.unionByName(cross)
-      val sccC = graft.ext.Graph.stronglyConnectedComponents(
-          edges, maxRounds = 4, maxPropRounds = 20)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sccC = Frames.scope().persist(
+        graft.ext.Graph.stronglyConnectedComponents(
+          edges, maxRounds = 4, maxPropRounds = 20))
       // size-gated label lookup (the louvainContract discipline): the SCC
       // label table is node-sized, so broadcast only under a row limit —
       // over it the endpoint lookups are plain node-keyed equi-joins.
       val nLabels = sccC.count()
-      val scc = s.createDataFrame(sccC.rdd, sccC.schema)
+      val scc = Frames.rebind(sccC)
       def look(n: String, c: String) = {
         val l = scc.select(col("id").as(n), col("scc").as(c))
         if (nLabels <= graft.ext.Graph.BroadcastLabelRowLimit) broadcast(l)

@@ -41,10 +41,10 @@ object Incremental {
       .csv(bronzeDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val silver = Layout.withDatePartitions(clean(batch), col("timestamp"))
-          Sources.writeSilver(silver, silverDir)
-        }
+        // an empty batch (header-only files) writes no silver row, and an
+        // `isEmpty` check first would cost a job per drain
+        val silver = Layout.withDatePartitions(clean(batch), col("timestamp"))
+        Sources.writeSilver(silver, silverDir)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -147,19 +147,17 @@ object Incremental {
       .parquet(silverDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val touched = batch.filter(col("is_valid"))
-            .select(col("year"), col("month"), col("day")).distinct().collect()
-          if (touched.nonEmpty) {
-            val prune = touched.map { r =>
-              col("year") === r.getInt(0) && col("month") === r.getInt(1) && col("day") === r.getInt(2)
-            }.reduce(_ || _)
-            val silverTouched = spark.read.parquet(silverDir).filter(prune).cache()
-            try tables.foreach { table =>
-              Sources.overwritePartitions(Gold.buildersByTable(table)(silverTouched),
-                Layout.goldDir(goldRoot, table), "date")
-            } finally silverTouched.unpersist(blocking = false)
-          }
+        val touched = batch.filter(col("is_valid"))
+          .select(col("year"), col("month"), col("day")).distinct().collect()
+        if (touched.nonEmpty) {
+          val prune = touched.map { r =>
+            col("year") === r.getInt(0) && col("month") === r.getInt(1) && col("day") === r.getInt(2)
+          }.reduce(_ || _)
+          val silverTouched = spark.read.parquet(silverDir).filter(prune).cache()
+          try tables.foreach { table =>
+            Sources.overwritePartitions(Gold.buildersByTable(table)(silverTouched),
+              Layout.goldDir(goldRoot, table), "date")
+          } finally silverTouched.unpersist(blocking = false)
         }
       }
       .option("checkpointLocation", checkpointDir)

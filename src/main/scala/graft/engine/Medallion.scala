@@ -19,9 +19,9 @@ object Medallion {
     * (checkpointed, exactly-once), then append a fresh gold snapshot per domain.
     * Returns gold table names written. Re-running without new bronze files
     * appends identical gold snapshots and re-drains nothing — the reference's
-    * idempotence contract. A domain none of whose files has landed yet (no
-    * bronze, hence no silver) is skipped, like the reference's empty-frame
-    * guard (silver_to_gold.py:38-41). */
+    * idempotence contract. A domain with no silver row yet (no bronze file
+    * landed, or only header-only ones) is skipped, like the reference's
+    * empty-frame guard (silver_to_gold.py:38-41). */
   def runOnce(spark: SparkSession, root: String,
               domains: Seq[String] = Domains): Seq[String] = {
     domains.foreach { d =>
@@ -32,7 +32,7 @@ object Medallion {
     }
     domains.flatMap { d =>
       val silverPath = Layout.silverDir(root, d)
-      if (exists(spark, silverPath)) Incremental.snapshotGold(spark, d, silverPath, root)
+      if (hasDataFile(spark, silverPath)) Incremental.snapshotGold(spark, d, silverPath, root)
       else Seq.empty
     }
   }
@@ -43,4 +43,20 @@ object Medallion {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  /** Whether `dir` holds any data file: a drain of header-only bronze files
+    * commits a silver directory holding just its `_SUCCESS` marker, which a
+    * schema-inferring read rejects. Stops at the first data file. */
+  private def hasDataFile(spark: SparkSession, dir: String): Boolean =
+    exists(spark, dir) && {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(p, true)
+      var found = false
+      while (!found && files.hasNext) {
+        val name = files.next().getPath.getName
+        found = !name.startsWith("_") && !name.startsWith(".")
+      }
+      found
+    }
 }

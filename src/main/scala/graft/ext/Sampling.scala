@@ -48,20 +48,18 @@ object Sampling {
                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(rounds >= 1, s"greedyCoverage: rounds must be >= 1, got $rounds")
     val spark = docs.sparkSession
-    val shd = Dedup.shingleSets(docs, 3, idCol, textCol)
-      .select(col(idCol), explode(col("sh")).as("g")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val f = Frames.scope()
+    val shd = f.persist(Dedup.shingleSets(docs, 3, idCol, textCol)
+      .select(col(idCol), explode(col("sh")).as("g")).distinct())
     // each round's `covered` supersedes the previous one; materialize the new
     // frame, then release the old — otherwise cached partitions + lineage
     // accumulate across rounds (and leak past the call).
-    var covered: DataFrame = null
-    var prev: DataFrame = null
+    var covered = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("g",
+          org.apache.spark.sql.types.StringType))))
     try {
-      covered = spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("g",
-            org.apache.spark.sql.types.StringType))))
       var nCovered = 0L
       val picks = (1 to rounds).map { round =>
         val winner = shd.join(covered, Seq("g"), "left_anti")
@@ -70,20 +68,18 @@ object Sampling {
           .collect().headOption.map(r => (r.getLong(0), r.getLong(1)))
           .getOrElse((-1L, 0L)) // all shingles covered: sentinel, gain 0
         nCovered += winner._2
-        prev = covered
-        covered = covered.unionAll(
+        val prev = covered
+        covered = f.keep(covered.unionAll(
             shd.filter(col(idCol) === winner._1).select(col("g")))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        covered.count() // materialize before cutting the predecessor loose
-        if (round > 1) prev.unpersist(blocking = false) // round 1's prev is the unpersisted empty seed
+          .distinct()) // materialize before cutting the predecessor loose
+        f.release(prev) // round 1's empty seed is not the scope's: a no-op
         (round, winner._1, winner._2, nCovered)
       }
       spark.createDataFrame(picks.toList)
         .toDF("round", "doc_id", "n_new", "n_covered")
     } finally {
-      shd.unpersist(blocking = false)
-      if (covered != null) covered.unpersist(blocking = false)
+      f.release(shd)
+      f.release(covered)
     }
   }
 

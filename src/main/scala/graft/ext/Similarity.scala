@@ -318,14 +318,11 @@ object Similarity {
     require(maxRounds >= 0, s"nnDescentConverge: maxRounds must be >= 0, got $maxRounds")
     require(minNewPermille >= 0 && minNewPermille <= 1000,
       s"nnDescentConverge: minNewPermille must be in [0, 1000], got $minNewPermille")
-    val spark = embeddings.sparkSession
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def materialize(df: DataFrame): (DataFrame, Long) = {
-      val c = df.select(col("query_id"), col("neighbor_id")).persist(level)
-      val n = c.count()
-      (spark.createDataFrame(c.rdd, c.schema), n)
-    }
-    val (g0, n0) = materialize(lshKnnGraph(embeddings, k, bits, dim, idCol, vecCol, salts))
+    val f = Frames.scope()
+    val g0C = f.persist(lshKnnGraph(embeddings, k, bits, dim, idCol, vecCol, salts)
+      .select(col("query_id"), col("neighbor_id")))
+    val n0 = g0C.count()
+    val g0 = Frames.rebind(g0C)
     val stages = scala.collection.mutable.ArrayBuffer(NnDescentStage(0, g0, n0, n0))
     var r = 1
     var converged = false
@@ -339,20 +336,17 @@ object Similarity {
       // the materializing action. The round-16 shape paid two extra jobs
       // per round (a count() to fill the cache, then a separate anti-join
       // count for nNew).
-      val c = nnDescentRound(prev, embeddings, k, idCol, vecCol)
+      val c = f.persist(nnDescentRound(prev, embeddings, k, idCol, vecCol)
         .select(col("query_id"), col("neighbor_id"))
         .join(prev.select(col("query_id"), col("neighbor_id"),
           lit(true).as("__seen")), Seq("query_id", "neighbor_id"), "left")
         .select(col("query_id"), col("neighbor_id"),
-          col("__seen").isNull.as("__new"))
-        .persist(level)
+          col("__seen").isNull.as("__new")))
       val row = c.agg(count(lit(1)).as("n"),
         count(when(col("__new"), lit(1))).as("n_new")).head()
       val n = row.getLong(0)
       val nNew = row.getLong(1)
-      val g = spark.createDataFrame(
-        c.select(col("query_id"), col("neighbor_id")).rdd,
-        org.apache.spark.sql.types.StructType(c.schema.take(2)))
+      val g = Frames.rebind(c.select(col("query_id"), col("neighbor_id")))
       stages += NnDescentStage(r, g, n, nNew)
       converged = nNew * 1000L <= minNewPermille * n
       r += 1

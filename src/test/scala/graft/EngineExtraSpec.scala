@@ -389,6 +389,20 @@ class EngineExtraSpec extends SparkSpec {
     }
   }
 
+  test("Medallion.runOnce skips gold for a domain whose only bronze file is header-only") {
+    withTempDir { root =>
+      import graft.engine.{Generators, Layout, Medallion}
+      val bronze = Layout.bronzeDir(root, "sales")
+      Generators.salesBatch(spark, 10, seed = 111).limit(0).coalesce(1)
+        .write.option("header", "true").mode("append").csv(bronze)
+      assert(Medallion.runOnce(spark, root).isEmpty)
+      Generators.salesBatch(spark, 30, seed = 112).coalesce(1)
+        .write.option("header", "true").mode("append").csv(bronze)
+      assert(Medallion.runOnce(spark, root).sorted == Seq("category_sales_summary",
+        "daily_sales_summary", "payment_method_summary"))
+    }
+  }
+
   test("JSON and ORC sources round-trip the bronze/silver schemas") {
     withTempDir { dir =>
       import graft.engine.{Generators, Layout, Schemas, Silver}

@@ -31,6 +31,32 @@ class IncrementalSpec extends SparkSpec {
     }
   }
 
+  test("a header-only bronze file drains to no silver row, and the next file drains once") {
+    withTempDir { root =>
+      val bronze = Layout.bronzeDir(root, "sales")
+      val silver = Layout.silverDir(root, "sales")
+      val ckpt = Layout.checkpointDir(root, "sales")
+      Generators.salesBatch(spark, 10, seed = 4).limit(0).coalesce(1)
+        .write.option("header", "true").mode("append").csv(bronze)
+      val landed = new java.io.File(bronze).listFiles().filter(_.getName.endsWith(".csv"))
+      assert(landed.length == 1 && landed.head.length() > 0, "expected one header-only CSV")
+      Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, ckpt)
+      def silverFiles: Seq[java.io.File] = {
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+        walk(new java.io.File(silver)).filter(_.getName.endsWith(".parquet"))
+      }
+      assert(silverFiles.isEmpty)
+
+      Generators.salesBatch(spark, 30, seed = 5).coalesce(1)
+        .write.option("header", "true").mode("append").csv(bronze)
+      Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, ckpt)
+      assert(Sources.readSilver(spark, silver).count() == 30)
+      Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, ckpt)
+      assert(Sources.readSilver(spark, silver).count() == 30)
+    }
+  }
+
   test("streamingUpsert merges each drained batch into versioned state exactly once") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._

@@ -127,29 +127,16 @@ class PlanGuardSpec extends SparkSpec {
         case e: Throwable =>
           Seq(s"$name: query construction failed at $sfDir: ${e.getMessage}")
       }
-    // The bridges/biconnectivity family sweeps the GLOBAL persistent-RDD
-    // registry around its inner CC calls (releaseForeignSince) — run
-    // concurrently it unpersists another thread's in-flight
-    // localCheckpointed blocks (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Those
-    // four run serially after the pool drains; everything else only ever
-    // releases its own frames and parallelizes safely.
-    val serialAfter = Set("q393_bridges", "q394_2ecc",
-      "q395_articulation", "q396_bcc")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     val futures = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => serialAfter.contains(q._1))
       .map { case (name, fn) => scala.concurrent.Future(check(name, fn)) }
     val failures =
       try {
-        val parallel = scala.concurrent.Await.result(
+        scala.concurrent.Await.result(
           scala.concurrent.Future.sequence(futures),
           scala.concurrent.duration.Duration(30, "min")).flatten
-        val serial = SparkEntry.queries.toSeq.sortBy(_._1)
-          .filter(q => serialAfter.contains(q._1))
-          .flatMap { case (name, fn) => check(name, fn) }
-        parallel ++ serial
       } finally {
         pool.shutdown()
         spark.catalog.clearCache()
