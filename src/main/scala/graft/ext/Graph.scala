@@ -650,12 +650,15 @@ object Graph {
     // partitioning, so each round exchanges the live set ONCE (the dst-side
     // semi) instead of three times. The dedup exchange below rides the same
     // repartition.
-    var live = f.keep(Frames.rebind(edges.where(col(idA) =!= col(idB))
+    var live = f.persist(Frames.rebind(edges.where(col(idA) =!= col(idB))
       .select(explode(array(
         struct(col(idA).as("src"), col(idB).as("dst")),
         struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst")))
       .repartition(col("src")).dropDuplicates("src", "dst"))
+    // the live set's size, carried from round to round: each round's
+    // materializing count is the next round's "before"
+    var before = live.count()
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -669,11 +672,11 @@ object Graph {
         .join(strong.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
         .select(col("src"), col("dst")))
         .repartition(col("src")))
-      val before = live.count()
       val after = pruned.count()
       f.release(live)
       live = pruned
       converged = before == after
+      before = after
     }
     // the final live set stays persisted: the returned plan reads it
     live.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
@@ -745,10 +748,12 @@ object Graph {
     require(k >= 3 && maxRounds >= 1,
       s"kTruss: need k >= 3, maxRounds >= 1; got $k, $maxRounds")
     val f = Frames.scope()
-    var cur = f.keep(Frames.rebind(edges.where(col(idA) =!= col(idB))
+    var cur = f.persist(Frames.rebind(edges.where(col(idA) =!= col(idB))
       .select(least(col(idA), col(idB)).cast("long").as("a"),
         greatest(col(idA), col(idB)).cast("long").as("b")))
       .repartition(col("a")).dropDuplicates("a", "b"))
+    // carried like kCore's: each round's count is the next round's "before"
+    var nBefore = cur.count()
     var lastSup: DataFrame = null
     var round = 0
     var converged = false
@@ -768,10 +773,10 @@ object Graph {
           withSup.where(col("support") >= k - 2).select(col("a"), col("b")))
         .repartition(col("a")))
       val nAfter = pruned.count()
-      val nBefore = cur.count()
       f.release(cur)
       cur = pruned
       converged = nAfter == nBefore
+      nBefore = nAfter
     }
     cur.join(lastSup, Seq("a", "b"))
       .select(col("a").as(idA), col("b").as(idB), col("support"))

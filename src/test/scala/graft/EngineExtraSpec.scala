@@ -403,6 +403,139 @@ class EngineExtraSpec extends SparkSpec {
     }
   }
 
+  /** Lands one generated batch per domain in bronze (seeds `seed`, `seed + 1`, …). */
+  private def landAll(root: String, n: Long, seed: Long,
+                      baseTs: String = "2026-01-01 00:00:00"): Unit = {
+    import graft.engine.{Generators, Layout, Medallion}
+    Medallion.Domains.zipWithIndex.foreach { case (d, i) =>
+      val batch = d match {
+        case "sales" => Generators.salesBatch(spark, n, seed + i, baseTs)
+        case "customer_events" => Generators.customerEventsBatch(spark, n, seed + i, baseTs)
+        case _ => Generators.inventoryBatch(spark, n, seed + i, baseTs)
+      }
+      batch.coalesce(1).write.option("header", "true").mode("append")
+        .csv(Layout.bronzeDir(root, d))
+    }
+  }
+
+  private def chainThreadsAlive: Seq[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.getName.startsWith("medallion-chain-") && t.isAlive)
+  }
+
+  test("Medallion.runOnce rejects duplicate domains") {
+    withTempDir { root =>
+      import graft.engine.Medallion
+      landAll(root, 20, 140)
+      val err = intercept[IllegalArgumentException](
+        Medallion.runOnce(spark, root, Seq("sales", "inventory", "sales")))
+      assert(err.getMessage.contains("duplicate domains"))
+      assert(!new java.io.File(graft.engine.Layout.silverDir(root, "sales")).exists)
+    }
+  }
+
+  test("Medallion.runOnce rethrows a failing domain's own error after the other domains publish gold") {
+    withTempDir { root =>
+      import graft.engine.{Layout, Medallion}
+      landAll(root, 40, 150)
+      // a plain file where inventory's silver directory belongs: its drain's
+      // silver write fails, the other two chains are unaffected
+      val blocker = new java.io.File(Layout.silverDir(root, "inventory"))
+      blocker.getParentFile.mkdirs()
+      java.nio.file.Files.writeString(blocker.toPath, "not a directory")
+      val err = intercept[Throwable](Medallion.runOnce(spark, root))
+      assert(err.isInstanceOf[org.apache.spark.sql.streaming.StreamingQueryException],
+        s"expected the drain's own error, got $err")
+      assert(err.getMessage.contains("inventory"), err.getMessage)
+      for (d <- Seq("sales", "customer_events"); t <- Gold.tablesOf(d))
+        assert(Sources.readSilver(spark, Layout.goldDir(root, t)).count() > 0, s"$t not published")
+      Gold.tablesOf("inventory").foreach(t =>
+        assert(!new java.io.File(Layout.goldDir(root, t)).exists, s"$t published"))
+      assert(spark.streams.active.isEmpty)
+      assert(chainThreadsAlive.isEmpty)
+    }
+  }
+
+  test("Medallion.runOnce runs every job with the calling thread's job group and local properties") {
+    withTempDir { root =>
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      import graft.engine.Medallion
+      // a tick before the caller sets anything: a pool kept across calls
+      // would hold threads that never saw the properties set below
+      assert(Medallion.runOnce(spark, root).isEmpty)
+      landAll(root, 40, 160)
+      val sc = spark.sparkContext
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e.properties)
+      }
+      def group(p: java.util.Properties) = p.getProperty("spark.jobGroup.id")
+      // one job under a marker group: the listener bus delivers in order, so
+      // the jobs between the two markers are exactly the tick's
+      def marker(g: String): Unit = {
+        sc.setJobGroup(g, g)
+        spark.range(1).count()
+        sc.clearJobGroup()
+      }
+      sc.addSparkListener(listener)
+      try {
+        marker("tick-start")
+        sc.setJobGroup("tick-g", "medallion tick")
+        sc.setLocalProperty("graft.test.caller", "tick-caller")
+        try assert(Medallion.runOnce(spark, root).size == 7)
+        finally {
+          sc.clearJobGroup()
+          sc.setLocalProperty("graft.test.caller", null)
+        }
+        marker("tick-end")
+        eventually(timeout(60.seconds)) { assert(seen.asScala.exists(group(_) == "tick-end")) }
+      } finally sc.removeSparkListener(listener)
+      val tick = seen.asScala.toSeq.dropWhile(group(_) != "tick-start")
+        .dropWhile(group(_) == "tick-start").takeWhile(group(_) != "tick-end")
+      // a stream sets its own job group (its run id) on its thread, but it
+      // still inherits the other local properties of the thread that started it
+      val (streamJobs, batchJobs) = tick.partition(_.getProperty("sql.streaming.queryId") != null)
+      assert(streamJobs.nonEmpty && batchJobs.nonEmpty)
+      assert(tick.forall(_.getProperty("graft.test.caller") == "tick-caller"),
+        tick.map(group).distinct)
+      assert(batchJobs.forall(group(_) == "tick-g"), batchJobs.map(group).distinct)
+      assert(chainThreadsAlive.isEmpty)
+    }
+  }
+
+  test("Medallion.runOnce over two ticks with late rows: each latest gold snapshot equals its builder over the final silver") {
+    withTempDir { root =>
+      import graft.engine.{Layout, Medallion}
+      // tick 1 spans Dec 31–Jan 1, tick 2 spans Jan 1–Jan 2: tick 2's late
+      // rows land on a date tick 1 already published
+      landAll(root, 60, 170, baseTs = "2026-01-01 12:00:00")
+      Medallion.runOnce(spark, root)
+      landAll(root, 60, 180, baseTs = "2026-01-02 00:00:00")
+      assert(Medallion.runOnce(spark, root) == Medallion.Domains.flatMap(Gold.tablesOf))
+      Medallion.Domains.foreach { d =>
+        val perDate = Sources.readSilver(spark, Layout.silverDir(root, d))
+          .groupBy(to_date(col("timestamp")).as("date"))
+          .agg(countDistinct(col("processed_at")).as("drains"))
+        assert(perDate.where(col("drains") >= 2).count() > 0, s"$d: no date shared by both ticks")
+      }
+      Gold.domainByTable.toSeq.sorted.foreach { case (table, domain) =>
+        val gold = Sources.readSilver(spark, Layout.goldDir(root, table))
+        val latestAt = gold.agg(max(col("generated_at"))).first().getString(0)
+        val latest = gold.where(col("generated_at") === latestAt).drop("generated_at")
+        val full = Gold.buildersByTable(table)(Sources.readSilver(spark, Layout.silverDir(root, domain)))
+        val cols = full.columns.sorted
+        val a = latest.select(cols.head, cols.tail: _*)
+        val b = full.select(cols.head, cols.tail: _*)
+        assert(a.count() == b.count(), s"$table row count")
+        assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"$table differs from its builder")
+      }
+    }
+  }
+
   test("JSON and ORC sources round-trip the bronze/silver schemas") {
     withTempDir { dir =>
       import graft.engine.{Generators, Layout, Schemas, Silver}
