@@ -30,7 +30,7 @@ import graft.ext.{Dedup, Frames, Similarity, TextAnalysis}
   *  - q15_union_slices              OP-5
   *  - q16_window_running            window functions (§2.6 extension)
   *  - q17_month_rollup              OP-3 (date-partition derivation as columns)
-  *  - q18_incremental_medallion     OP-9,35,36 (streaming AvailableNow drain;
+  *  - q18_incremental_medallion     OP-9,35,36 (ledger-tracked bronze drain;
   *                                  hash-oracled via portable-hash generator replay)
   *  - q19_semi_anti_join            left-semi / left-anti joins (§2.6 extension)
   *  - q20..q30                      extension surface: tokens, quality, lang-id,
@@ -377,10 +377,10 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_orders"), round(sum("o_totalprice"), 2).as("revenue"))),
 
     // End-to-end incremental medallion: seeded PORTABLE generator batches land
-    // as bronze CSV, a Structured Streaming AvailableNow drain cleans them to
-    // silver with checkpointed exactly-once file tracking, and the gold daily
-    // KPI builder runs on the result. Filesystem side effects stay inside a
-    // fresh temp dir. The streaming ledger itself is invisible to values, so
+    // as bronze CSV, a batch drain cleans them to silver and records each
+    // drained file in its ledger, and the gold daily KPI builder runs on the
+    // result. Filesystem side effects stay inside a fresh temp dir. The
+    // drain ledger itself is invisible to values, so
     // the DuckDB oracle replays generator arithmetic (portable md5 hash
     // family, integer-cents money) + silver rules + the gold aggregate as
     // CTEs — the medallion spine is hash-verified, not just rows-only.
@@ -3705,7 +3705,7 @@ object SparkEntry {
     },
 
     // Medallion spine, CATEGORY gold table: same portable sales batches and
-    // streaming drain as q18, but the gold read-out is categorySalesSummary —
+    // bronze drain as q18, but the gold read-out is categorySalesSummary —
     // which exercises the broadcast product-dimension join (OP-34) through
     // the hash oracle (the pick index → product → category mapping is
     // replayed from the same literal catalogues in DuckDB).
@@ -3724,7 +3724,7 @@ object SparkEntry {
     },
 
     // Medallion spine, EVENTS domain: portable customer-events batches
-    // (UNKNOWN-enum + null-customer defects) through the streaming drain and
+    // (UNKNOWN-enum + null-customer defects) through the bronze drain and
     // silver's enum/required validation (OP-11/12), read out as the
     // customer-activity gold table — the INVALID_EVENT_TYPE rule is now
     // hash-verified end to end, not just unit-tested.

@@ -7,50 +7,74 @@ import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental bronze→silver→gold processing (SURVEY.md §2.1 OP-9, §2.5 OP-35/36).
   *
-  * The reference implements exactly-once file processing by hand: a JSON ledger of
-  * processed bronze paths (`storage/local_storage.py:74-104`,
-  * `.state/<domain>_processed.json`) diffed against an `rglob` every 30 minutes
-  * (`dags/data_lake_pipeline.py:107-149`). Structured Streaming's file source keeps
-  * that exact ledger — the checkpointed seen-files log — but commits it atomically
-  * with the sink, closing the reference's crash window between silver write and
-  * ledger write (`bronze_to_silver.py:216-217`, SURVEY.md §3.2).
+  * The drain's ledger is the reference's: a list of processed bronze paths
+  * (`storage/local_storage.py:74-104`, `.state/<domain>_processed.json`) diffed
+  * against a listing of bronze (`dags/data_lake_pipeline.py:107-149`), kept as one
+  * file per drain that is claimed and published with the versioned store's helpers
+  * below ([[claimExclusive]], [[publishByRename]]). The reference writes silver and
+  * then its ledger as two unguarded steps (`bronze_to_silver.py:216-217`, SURVEY.md
+  * §3.2); after a crash between the silver write and the publish, the domain's
+  * next drain stops loudly at the leftover claim instead of re-appending the batch.
   *
-  * `Trigger.AvailableNow` + checkpoint = the reference's "drain everything new, then
-  * stop" 30-minute batch semantics; leave the trigger default for a continuously
-  * running pipeline. `foreachBatch` applies the *batch* cleaner per drained
-  * micro-batch, which matches the reference exactly: dedup is scoped to one drain
-  * (`pd.concat` of that run's files, `bronze_to_silver.py:214`), not global history —
-  * and as a bonus needs no unbounded streaming state.
+  * A drain is the reference's "drain everything new, then stop" 30-minute batch,
+  * and it applies the batch cleaner to what it drains: dedup is scoped to one
+  * drain (`pd.concat` of that run's files, `bronze_to_silver.py:214`), not global
+  * history.
   *
-  * Scale: the seen-files log is O(files) on the driver — at 100 TB keep bronze files
-  * large (the generators' 10-row CSVs would be the real bottleneck; compact at the
-  * landing zone).
+  * Scale: the ledger is O(files) on the driver and is rewritten by every drain —
+  * at 100 TB keep bronze files large (the generators' 10-row CSVs would be the
+  * real bottleneck; compact at the landing zone).
   */
 object Incremental {
 
   /** Drain all unprocessed bronze CSVs for one domain into silver parquet, once.
     * Re-running is a no-op until new files land — the reference's
-    * `get_unprocessed_bronze_files` contract (`local_storage.py:90-97`). */
+    * `get_unprocessed_bronze_files` contract (`local_storage.py:90-97`).
+    *
+    * `checkpointDir` holds the ledger: `drain-<n>` lists every bronze file
+    * drains 0..n drained, one path per line. A drain reads the latest entry n
+    * and subtracts it from a listing of bronze (Spark's file index, which
+    * skips `_`- and `.`-prefixed names); with no new file it stops there,
+    * before any claim or job. Otherwise it claims n+1 (`drain-<n+1>._claim`),
+    * appends the new files' clean rows to silver, publishes `drain-<n+1>`, and
+    * deletes the older entries and claims. A second drain of the domain loses
+    * at the claim with `ConcurrentModificationException` before it writes; so
+    * does every drain after one that failed between its claim and its
+    * publish, since silver may already hold that batch. */
   def drainBronzeToSilver(spark: SparkSession, domain: String,
                           bronzeDir: String, silverDir: String,
                           checkpointDir: String): Unit = {
-    val clean = Silver.cleanerByDomain(domain)
-    val query = spark.readStream
-      .schema(Schemas.bronzeByDomain(domain))
-      .option("header", "true")
-      .csv(bronzeDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // an empty batch (header-only files) writes no silver row, and an
-        // `isEmpty` check first would cost a job per drain
-        val silver = Layout.withDatePartitions(clean(batch), col("timestamp"))
-        Sources.writeSilver(silver, silverDir)
+    val state = new Path(checkpointDir)
+    val fs = fsOf(spark, state)
+    val names = if (fs.exists(state)) fs.listStatus(state).toSeq.map(_.getPath.getName) else Nil
+    val last = names.collect { case LedgerEntry(n) => n.toLong }.maxOption
+    if (last.isEmpty && names.contains("offsets"))
+      throw new IllegalStateException(s"drainBronzeToSilver: $checkpointDir holds a " +
+        "streaming checkpoint and no drain ledger; draining would re-append every bronze file")
+    val drained = last.fold(Set.empty[String])(n =>
+      readUtf8(fs, new Path(state, s"drain-$n")).linesIterator.filter(_.nonEmpty).toSet)
+    val bronze = spark.read.schema(Schemas.bronzeByDomain(domain)).option("header", "true")
+    val fresh = bronze.csv(bronzeDir).inputFiles.filterNot(drained).sorted
+    if (fresh.nonEmpty) {
+      val next = last.fold(0L)(_ + 1)
+      val entry = new Path(state, s"drain-$next")
+      claimExclusive(fs, new Path(state, s"drain-$next._claim"), entry,
+        s"drainBronzeToSilver: drain $next of $checkpointDir")
+      val batch = bronze.option("basePath", bronzeDir)
+        .csv(fresh.map(f => new Path(new java.net.URI(f)).toString): _*)
+      val silver = Layout.withDatePartitions(Silver.cleanerByDomain(domain)(batch), col("timestamp"))
+      Sources.writeSilver(silver, silverDir)
+      publishByRename(fs, entry, (drained.toSeq ++ fresh).sorted.mkString("", "\n", "\n"))
+      names.foreach {
+        case n @ LedgerFile(v) if v.toLong < next => fs.delete(new Path(state, n), false)
+        case _ =>
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    }
   }
+
+  /** A published ledger entry, and any ledger file (an entry or its claim). */
+  private val LedgerEntry = "drain-(\\d+)".r
+  private val LedgerFile = "drain-(\\d+)(?:\\._claim)?".r
 
   /** Event-time windowed aggregation with a watermark — the Structured Streaming
     * shape the reference's file-grain incremental model lacks (SURVEY.md §2.6:
@@ -143,7 +167,7 @@ object Incremental {
                             checkpointDir: String): Seq[String] = {
     val tables = Gold.tablesOf(domain)
     val query = spark.readStream
-      .schema(silverStreamSchema(domain))
+      .schema(Schemas.silverOnDiskFor(domain))
       .parquet(silverDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -153,7 +177,8 @@ object Incremental {
           val prune = touched.map { r =>
             col("year") === r.getInt(0) && col("month") === r.getInt(1) && col("day") === r.getInt(2)
           }.reduce(_ || _)
-          val silverTouched = spark.read.parquet(silverDir).filter(prune).cache()
+          val silverTouched = spark.read.schema(Schemas.silverOnDiskFor(domain))
+            .parquet(silverDir).filter(prune).cache()
           try tables.foreach { table =>
             Sources.overwritePartitions(Gold.buildersByTable(table)(silverTouched),
               Layout.goldDir(goldRoot, table), "date")
@@ -167,22 +192,13 @@ object Incremental {
     tables
   }
 
-  /** Silver-on-disk schema for streaming reads: domain silver + the Hive
-    * partition columns the writer adds. */
-  private def silverStreamSchema(domain: String) = {
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    StructType(Schemas.silverFor(domain).fields ++
-      Seq(StructField("year", IntegerType), StructField("month", IntegerType),
-        StructField("day", IntegerType)))
-  }
-
   /** Silver→gold full-recompute snapshot for every gold table of one domain
     * (reference `silver_to_gold.py:219-235`). The valid+dated base is cached once
     * and fanned out to the domain's 2-3 gold tables (the reference recomputes the
     * filter per table from an in-memory frame; at scale the shared scan dominates). */
   def snapshotGold(spark: SparkSession, domain: String,
                    silverDir: String, goldRoot: String): Seq[String] = {
-    val silver = Sources.readSilver(spark, silverDir)
+    val silver = spark.read.schema(Schemas.silverOnDiskFor(domain)).parquet(silverDir)
     val base = Gold.withValidDated(silver).cache()
     try {
       val tables = Gold.tablesOf(domain)
@@ -355,10 +371,12 @@ object Incremental {
 
   /** The data files a manifest lists: bare `part-` names in a commit
     * manifest, absolute paths in a clone manifest. */
-  private def manifestEntries(fs: FileSystem, manifest: Path): Seq[String] = {
-    val in = fs.open(manifest)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    "\"([^\"]*part-[^\"]+)\"".r.findAllMatchIn(json).map(_.group(1)).toSeq
+  private def manifestEntries(fs: FileSystem, manifest: Path): Seq[String] =
+    "\"([^\"]*part-[^\"]+)\"".r.findAllMatchIn(readUtf8(fs, manifest)).map(_.group(1)).toSeq
+
+  private def readUtf8(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 
   private def writeUtf8(fs: FileSystem, p: Path, overwrite: Boolean, text: String): Unit = {
@@ -377,7 +395,8 @@ object Incremental {
   }
 
   /** Take the create-exclusive `claim`, the linearization point of
-    * [[commitVersionExclusive]] and [[commitTransaction]]: throws
+    * [[commitVersionExclusive]], [[commitTransaction]] and
+    * [[drainBronzeToSilver]]: throws
     * `ConcurrentModificationException` if the claim or the `published`
     * commit already exists, or another writer wins the create. */
   private def claimExclusive(fs: FileSystem, claim: Path, published: Path,

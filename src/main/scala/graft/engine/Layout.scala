@@ -27,6 +27,22 @@ object Layout {
   def goldDir(root: String, table: String): String = s"$root/gold/$table"
   def checkpointDir(root: String, domain: String): String = s"$root/.state/$domain"
 
+  /** Whether `dir` holds a data file at any depth: false for a missing
+    * directory, and `_`- and `.`-prefixed names (`_SUCCESS`, checksums,
+    * `_temporary`) are skipped, as Spark's own file listing skips them. Stops
+    * at the first data file. A Hadoop-FS listing, so it answers for HDFS/S3A
+    * roots too. */
+  def hasDataFile(spark: SparkSession, dir: String): Boolean = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def holds(d: Path): Boolean = fs.listStatus(d).exists { s =>
+      val name = s.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".") && (s.isFile || holds(s.getPath))
+    }
+    fs.exists(p) && holds(p)
+  }
+
   val partitionColumns: Seq[String] = Seq("year", "month", "day")
 
   /** Append year/month/day partition columns derived from `ts`.
@@ -77,26 +93,15 @@ object Layout {
     * specs re-unify into one logical schema. Callers wanting proof should
     * assert `PartitionFilters` on both scans (q246 REQUIREs it).
     *
-    * A subtree with NO part files (all the data fell on one side of the
+    * A subtree with NO data file (all the data fell on one side of the
     * cutover — [[writeDateSpecEvolution]] still leaves a `_SUCCESS`-only
     * directory there) contributes zero rows instead of the
     * schema-inference error a bare `spark.read.parquet` raises on an
     * empty directory; at least one subtree must hold data. */
   def readDateSpecEvolution(spark: SparkSession, root: String,
                             from: String, to: String): DataFrame = {
-    def hasPartFiles(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && {
-        val it = fs.listFiles(p, true)
-        var found = false
-        while (!found && it.hasNext)
-          found = it.next().getPath.getName.startsWith("part-")
-        found
-      }
-    }
-    val mHas = hasPartFiles(s"$root/spec=month")
-    val yHas = hasPartFiles(s"$root/spec=year")
+    val mHas = hasDataFile(spark, s"$root/spec=month")
+    val yHas = hasDataFile(spark, s"$root/spec=year")
     require(mHas || yHas,
       s"readDateSpecEvolution: no data under $root/spec=month or $root/spec=year")
     val m = if (mHas) Some(spark.read.parquet(s"$root/spec=month")
@@ -215,8 +220,8 @@ object Layout {
   /** Bin-packing small-file compaction — the OPTIMIZE analog for a landing
     * zone that accretes tiny files (the reference's generators write 10-row
     * CSVs; [[Incremental]]'s scale note names this the real 100 TB
-    * bottleneck: a streaming file source's seen-log and every scan's task
-    * count are O(files)). Rewrites `srcDir`'s parquet into
+    * bottleneck: the drain ledger and every scan's task count are
+    * O(files)). Rewrites `srcDir`'s parquet into
     * `ceil(bytes / targetFileBytes)` files at `destDir` and returns that
     * count.
     *

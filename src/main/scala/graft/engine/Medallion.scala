@@ -13,36 +13,37 @@ import org.apache.spark.sql.SparkSession
   *
   * The only ordering the DAG needs is drain→gold within one domain (gold
   * reads what that domain's drain wrote); the domains share nothing — each
-  * has its own bronze, silver, checkpoint and gold tables. So each domain's
+  * has its own bronze, silver, drain ledger and gold tables. So each domain's
   * chain runs on its own thread and the tick waits for all of them. Jobs
   * submitted one after another from a single driver thread never overlap,
   * on a cluster or in local mode, and a tick is a chain of ~30 small jobs
-  * plus stream start/stop and planning; running the chains side by side is
-  * what keeps the cores busy.
+  * plus planning; running the chains side by side is what keeps the cores
+  * busy.
   *
   * The pool is created per call and shut down before the call returns: its
   * threads are created by the calling thread, so they inherit its Spark
   * local properties (job group, description, scheduler pool), and no thread
-  * outlives the tick. A stream's jobs still carry the stream's own job group
-  * (its run id), as they do when started from the calling thread.
+  * outlives the tick. Every job of a tick, drain and gold alike, runs on a
+  * chain thread, so every one carries the caller's job group.
   */
 object Medallion {
 
   val Domains: Seq[String] = Seq("sales", "customer_events", "inventory")
 
   /** One pipeline tick: per domain, drain all unprocessed bronze into silver
-    * (checkpointed, exactly-once), then append a fresh gold snapshot of each
-    * of the domain's tables; the domains run concurrently. Returns the gold
-    * table names written, in domain order. Re-running without new bronze
-    * files appends identical gold snapshots and re-drains nothing — the
-    * reference's idempotence contract. A domain with no silver row yet (no
-    * bronze file landed, or only header-only ones) is skipped, like the
-    * reference's empty-frame guard (silver_to_gold.py:38-41).
+    * (each file once, tracked by the domain's drain ledger), then append a
+    * fresh gold snapshot of each of the domain's tables; the domains run
+    * concurrently. Returns the gold table names written, in domain order.
+    * Re-running without new bronze files appends identical gold snapshots
+    * and re-drains nothing — the reference's idempotence contract. A domain
+    * with no silver row yet (no bronze file landed, or only header-only ones)
+    * is skipped, like the reference's empty-frame guard
+    * (silver_to_gold.py:38-41).
     *
-    * If chains fail, every chain is waited for first (no stream is left
-    * mid-drain), then the first failing domain's own exception is thrown,
+    * If chains fail, every chain is waited for first (no drain is left
+    * mid-write), then the first failing domain's own exception is thrown,
     * with the later ones attached as suppressed. `domains` must be distinct:
-    * two concurrent streams on one checkpoint fail. */
+    * two drains of one domain race for one ledger claim, and the loser fails. */
   def runOnce(spark: SparkSession, root: String,
               domains: Seq[String] = Domains): Seq[String] = {
     require(domains.distinct.size == domains.size,
@@ -53,10 +54,10 @@ object Medallion {
         val chain: Callable[Seq[String]] = () => {
           val bronzePath = Layout.bronzeDir(root, d)
           val silverPath = Layout.silverDir(root, d)
-          if (exists(spark, bronzePath))
+          if (Layout.hasDataFile(spark, bronzePath))
             Incremental.drainBronzeToSilver(spark, d,
               bronzePath, silverPath, Layout.checkpointDir(root, d))
-          if (hasDataFile(spark, silverPath)) Incremental.snapshotGold(spark, d, silverPath, root)
+          if (Layout.hasDataFile(spark, silverPath)) Incremental.snapshotGold(spark, d, silverPath, root)
           else Seq.empty
         }
         pool.submit(chain)
@@ -85,27 +86,4 @@ object Medallion {
       t
     }
   }
-
-  /** Hadoop-FS existence check (a local java.io.File test would silently skip
-    * domains on HDFS/S3A roots). */
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Whether `dir` holds any data file: a drain of header-only bronze files
-    * commits a silver directory holding just its `_SUCCESS` marker, which a
-    * schema-inferring read rejects. Stops at the first data file. */
-  private def hasDataFile(spark: SparkSession, dir: String): Boolean =
-    exists(spark, dir) && {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listFiles(p, true)
-      var found = false
-      while (!found && files.hasNext) {
-        val name = files.next().getPath.getName
-        found = !name.startsWith("_") && !name.startsWith(".")
-      }
-      found
-    }
 }

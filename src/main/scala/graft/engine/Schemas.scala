@@ -85,4 +85,10 @@ object Schemas {
       case f => f
     } ++ silverAuditColumns)
   }
+
+  /** Silver as it lies on disk: [[silverFor]] plus the Hive partition columns
+    * the writer adds ([[Layout.partitionColumns]]). Reading silver with it
+    * skips the footer-inference job a schema-less parquet read runs. */
+  def silverOnDiskFor(domain: String): StructType =
+    StructType(silverFor(domain).fields ++ Layout.partitionColumns.map(StructField(_, IntegerType)))
 }

@@ -40,10 +40,6 @@ object Sources {
       .schema(StructType(schema.fields :+ StructField("_corrupt_record", StringType)))
       .csv(paths: _*)
 
-  /** OP-1: CSV sink (generator staging, reference `sales_generator.py:119`). */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.option("header", "true").mode("overwrite").csv(path)
-
   /** OP-6: silver Parquet sink, Hive-partitioned by event date
     * (reference `local_storage.py:111-126`). Append mode = the reference's
     * "nothing is ever deleted" contract (README.md:31). */

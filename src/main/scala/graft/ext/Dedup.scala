@@ -139,7 +139,8 @@ object Dedup {
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     docs.select(col(idCol), Shingles.wordShingles(col(textCol), k).as("sh"))
 
-  /** MinHash signatures, one row per document: `sig[j] = min over shingles s of
+  /** MinHash signatures over a precomputed (idCol, sh) shingle projection
+    * ([[shingleSets]]), one row per document: `sig[j] = min over shingles s of
     * xxhash64(j, xxhash64(s))`. Each shingle string is hashed ONCE; the family
     * members rehash the resulting long with the family index — fixed-width long
     * hashing, no per-family string building (an earlier `xxhash64(j ‖ s)` form
@@ -147,11 +148,6 @@ object Dedup {
     * near-dup query). Implemented explode→hash-agg: `numHashes` parallel `min`
     * aggregates — all codegen, partial-agg'd map-side.
     * Output: (idCol, sig: array<bigint>). */
-  def minhashSignatures(docs: DataFrame, k: Int = 3, numHashes: Int = 32,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    minhashSignaturesFromShingles(shingleSets(docs, k, idCol, textCol), numHashes, idCol)
-
-  /** Signature computation over a precomputed (idCol, sh) projection. */
   def minhashSignaturesFromShingles(shingles: DataFrame, numHashes: Int,
                                     idCol: String = "doc_id"): DataFrame = {
     val exploded = shingles
@@ -494,8 +490,7 @@ object Dedup {
   }
 
   /** STREAMING LSH index maintenance: drive [[lshIndexProbeAppend]] from a
-    * Structured Streaming source via `foreachBatch` (the engine's bronze
-    * drain pattern, Incremental.drainBronzeToSilver) so the dedup index
+    * Structured Streaming source via `foreachBatch` so the dedup index
     * advances with the ingest stream instead of waiting for a batch driver.
     * Micro-batch `b` is signed ONCE, appended as index partition
     * `batch = firstBatch + b`, and the near-dup pairs it completes are
@@ -536,8 +531,8 @@ object Dedup {
     * `is_valid` flag, quarantine rows KEPT with their reasons, never
     * dropped silently) → silver parquet write → LSH dedup-index maintain →
     * near-dup pair emit. Composes [[streamingLshMaintain]] with the
-    * bronze→silver drain ([[graft.engine.Incremental.drainBronzeToSilver]])
-    * so one micro-batch does clean → validate → index-maintain → pair-emit,
+    * bronze→silver clean and write of
+    * [[graft.engine.Incremental.drainBronzeToSilver]], so one micro-batch does clean → validate → index-maintain → pair-emit,
     * instead of a silver stream and a separate index stream re-reading it.
     *
     * Validation: `idCol` non-null and trimmed `textCol` of at least

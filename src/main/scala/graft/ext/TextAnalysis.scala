@@ -82,13 +82,6 @@ object TextAnalysis {
       .otherwise(size(filter(toks, t => t.isin(stopwords.map(lit): _*))).cast("double") / size(toks))
   }
 
-  /** Mean token length — degenerate values flag boilerplate/binary spill. */
-  def meanTokenLength(text: Column): Column = {
-    val toks = tokens(text)
-    when(size(toks) === 0, lit(0.0))
-      .otherwise(aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / size(toks))
-  }
-
   /** Composite quality score in [0,1]: favors mid-length documents with prose-like
     * stopword density and low punctuation noise (C4/Gopher-style heuristics). */
   def qualityScore(text: Column, stopwords: Seq[String]): Column = {

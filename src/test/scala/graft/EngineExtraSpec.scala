@@ -445,7 +445,7 @@ class EngineExtraSpec extends SparkSpec {
       blocker.getParentFile.mkdirs()
       java.nio.file.Files.writeString(blocker.toPath, "not a directory")
       val err = intercept[Throwable](Medallion.runOnce(spark, root))
-      assert(err.isInstanceOf[org.apache.spark.sql.streaming.StreamingQueryException],
+      assert(err.isInstanceOf[org.apache.hadoop.fs.ParentNotDirectoryException],
         s"expected the drain's own error, got $err")
       assert(err.getMessage.contains("inventory"), err.getMessage)
       for (d <- Seq("sales", "customer_events"); t <- Gold.tablesOf(d))
@@ -496,13 +496,14 @@ class EngineExtraSpec extends SparkSpec {
       } finally sc.removeSparkListener(listener)
       val tick = seen.asScala.toSeq.dropWhile(group(_) != "tick-start")
         .dropWhile(group(_) == "tick-start").takeWhile(group(_) != "tick-end")
-      // a stream sets its own job group (its run id) on its thread, but it
-      // still inherits the other local properties of the thread that started it
-      val (streamJobs, batchJobs) = tick.partition(_.getProperty("sql.streaming.queryId") != null)
-      assert(streamJobs.nonEmpty && batchJobs.nonEmpty)
+      // no job comes from a stream (which would set its own job group, its
+      // run id): drain and gold jobs alike carry the caller's job group, so
+      // `cancelJobGroup("tick-g")` reaches every one of them
+      assert(tick.nonEmpty)
+      assert(tick.forall(_.getProperty("sql.streaming.queryId") == null))
       assert(tick.forall(_.getProperty("graft.test.caller") == "tick-caller"),
         tick.map(group).distinct)
-      assert(batchJobs.forall(group(_) == "tick-g"), batchJobs.map(group).distinct)
+      assert(tick.forall(group(_) == "tick-g"), tick.map(group).distinct)
       assert(chainThreadsAlive.isEmpty)
     }
   }

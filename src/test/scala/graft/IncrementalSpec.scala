@@ -2,8 +2,8 @@ package graft
 
 import graft.engine.{Generators, Gold, Incremental, Layout, Sources}
 
-/** Incremental medallion layer (OP-9/35/36): streaming AvailableNow drain with
-  * checkpointed exactly-once file processing, end to end. */
+/** Incremental medallion layer (OP-9/35/36): the bronze drain and its
+  * ledger of drained files, end to end. */
 class IncrementalSpec extends SparkSpec {
 
   test("drainBronzeToSilver processes each bronze file exactly once across drains") {
@@ -54,6 +54,100 @@ class IncrementalSpec extends SparkSpec {
       assert(Sources.readSilver(spark, silver).count() == 30)
       Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, ckpt)
       assert(Sources.readSilver(spark, silver).count() == 30)
+    }
+  }
+
+  /** Lands a `rows`-row sales batch in `bronze` as one CSV and returns it. */
+  private def landSales(bronze: String, rows: Long, seed: Long): java.io.File = {
+    def csvs = Option(new java.io.File(bronze).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".csv")).toSet
+    val before = csvs
+    Generators.salesBatch(spark, rows, seed).coalesce(1)
+      .write.option("header", "true").mode("append").csv(bronze)
+    val landed = (csvs -- before).toSeq
+    assert(landed.size == 1, landed)
+    landed.head
+  }
+
+  private def silverRows(silver: String): Long = Sources.readSilver(spark, silver).count()
+
+  test("drainBronzeToSilver drains a file whose mtime is days older than the files already drained") {
+    withTempDir { root =>
+      val bronze = Layout.bronzeDir(root, "sales")
+      val silver = Layout.silverDir(root, "sales")
+      val ckpt = Layout.checkpointDir(root, "sales")
+      val first = landSales(bronze, 50, seed = 20)
+      Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, ckpt)
+      assert(silverRows(silver) == 50)
+      // an archive backfill copied with its mtime preserved (`cp -p`,
+      // `shutil.copy2`): 8 days older than the file already drained
+      val old = landSales(bronze, 30, seed = 21)
+      assert(old.setLastModified(first.lastModified() - 8L * 24 * 3600 * 1000))
+      Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, ckpt)
+      assert(silverRows(silver) == 80)
+    }
+  }
+
+  test("drainBronzeToSilver stops at a claim it does not own, before writing silver") {
+    withTempDir { root =>
+      val bronze = Layout.bronzeDir(root, "sales")
+      val silver = Layout.silverDir(root, "sales")
+      val ckpt = Layout.checkpointDir(root, "sales")
+      landSales(bronze, 50, seed = 22)
+      Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, ckpt)
+      val entries = new java.io.File(ckpt).list().filter(_.matches("drain-\\d+"))
+      assert(entries.length == 1, entries.toSeq)
+      val n = entries.head.stripPrefix("drain-").toLong
+      // the next drain's claim, as a concurrent drain holds it while it
+      // writes, or a drain that crashed before its publish leaves it
+      assert(new java.io.File(ckpt, s"drain-${n + 1}._claim").createNewFile())
+      landSales(bronze, 30, seed = 23)
+      intercept[java.util.ConcurrentModificationException](
+        Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, ckpt))
+      assert(silverRows(silver) == 50)
+    }
+  }
+
+  test("drainBronzeToSilver refuses a state dir that holds a streaming checkpoint and no ledger") {
+    withTempDir { root =>
+      val bronze = Layout.bronzeDir(root, "sales")
+      val silver = Layout.silverDir(root, "sales")
+      val ckpt = Layout.checkpointDir(root, "sales")
+      landSales(bronze, 50, seed = 24)
+      // a lake whose files were drained by a Structured Streaming query: its
+      // seen-files log sits in the checkpoint, and there is no ledger entry
+      spark.readStream.schema(graft.engine.Schemas.salesBronze).option("header", "true")
+        .csv(bronze).writeStream.format("noop").option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .awaitTermination()
+      assert(new java.io.File(ckpt, "offsets").isDirectory)
+      // the rows that stream wrote to silver
+      Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, s"$root/.state/other")
+      val before = silverRows(silver)
+      val err = intercept[IllegalStateException](
+        Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, ckpt))
+      assert(err.getMessage.contains("ledger"), err.getMessage)
+      assert(silverRows(silver) == before)
+    }
+  }
+
+  test("after two drains the state dir holds one ledger entry and no stream checkpoint") {
+    withTempDir { root =>
+      val bronze = Layout.bronzeDir(root, "sales")
+      val silver = Layout.silverDir(root, "sales")
+      val ckpt = Layout.checkpointDir(root, "sales")
+      landSales(bronze, 50, seed = 26)
+      Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, ckpt)
+      landSales(bronze, 30, seed = 27)
+      Incremental.drainBronzeToSilver(spark, "sales", bronze, silver, ckpt)
+      assert(silverRows(silver) == 80)
+      // checksum sidecars (`.<name>.crc`) are the local file system's own
+      val names = new java.io.File(ckpt).list().filterNot(_.startsWith(".")).toSeq.sorted
+      val entries = names.filter(_.matches("drain-\\d+"))
+      assert(entries.size == 1, names)
+      assert(names.diff(entries :+ s"${entries.head}._claim").isEmpty, names)
+      Seq("offsets", "commits", "sources", "metadata").foreach(n =>
+        assert(!names.contains(n), names))
     }
   }
 
